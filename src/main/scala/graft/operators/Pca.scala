@@ -59,17 +59,24 @@ object Pca {
       // dim head, mean collect — each a full scheduling round trip):
       // the pos-keyed profile's row count IS dim and any pos's count
       // IS n. Per-pos sums are unchanged, so the mean is bit-identical.
+      // posexplode_OUTER keeps a null or empty embedding as one null-pos
+      // row, where posexplode would drop it and silently undercount n;
+      // the null-pos group it forms in this same aggregation is rejected
+      // below at no extra job
       val prof = ex
-        .select(posexplode(col("embedding")).as(Seq("pos", "x")))
+        .select(posexplode_outer(col("embedding")).as(Seq("pos", "x")))
         .groupBy("pos").agg(sum(col("x").cast("double")).as("sx"),
           count(lit(1)).as("cnt"))
         .collect()
+      require(!prof.exists(_.isNullAt(0)),
+        s"null or empty embedding in $dir: " +
+          s"${prof.find(_.isNullAt(0)).map(_.getLong(2)).getOrElse(0L)} rows")
       val n = prof.head.getLong(2)
       // n is read off ONE position's profile row, which equals the
       // embedding row count only when every vector has the same length
-      // and none is null (posexplode drops nulls). Assert that instead
-      // of assuming it (ADVICE r15): a ragged or null embedding must
-      // fail loudly, not silently skew n/dim and the mean.
+      // (nulls were rejected above). Assert that instead of assuming it
+      // (ADVICE r15): a ragged embedding must fail loudly, not silently
+      // skew n/dim and the mean.
       require(prof.forall(_.getLong(2) == n),
         s"ragged embedding corpus in $dir: per-position counts " +
           s"${prof.map(_.getLong(2)).distinct.sorted.mkString(",")}")

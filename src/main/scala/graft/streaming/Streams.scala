@@ -1,7 +1,13 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.sources.Tables
 
@@ -553,6 +559,13 @@ object Streams {
     normalize(reader.parquet(eventsDir))
   }
 
+  /** Schema of an [[upsertBatch]] state version, declared so that
+    * reading the previous version runs no footer-inference job. */
+  val UpsertStateSchema: StructType = StructType(Seq(
+    StructField("user_id", LongType),
+    StructField("n_events", LongType),
+    StructField("total_value", DoubleType)))
+
   /** Exactly-once keyed UPSERT sink for `foreachBatch` — the
     * merge-into-a-serving-table shape streaming warehouses run where no
     * transactional table format is mounted. Two disciplines make the
@@ -566,64 +579,71 @@ object Streams {
     *  - ATOMICITY: the merged table is written to a fresh versioned
     *    directory first, and the tiny commit pointer naming it flips
     *    last via write-temp-then-atomic-rename — a crash at ANY point
-    *    leaves the previous pointer and version intact. Superseded
-    *    version directories are GC'd after the pointer moves, so the
+    *    leaves the previous pointer and version intact. Every other
+    *    version directory is deleted after the pointer moves, so the
     *    sink holds one live state copy plus the in-flight one.
     *
-    * The merge itself is additive (count/sum are decomposable), so
-    * state = old-state ∪ batch-aggregate, one groupBy on the key —
-    * the same partial-aggregate merge as q135's fact maintenance. */
+    * The merge itself is additive (count/sum are decomposable): each
+    * batch row enters as `(user_id, 1, value)`, is unioned with the
+    * previous version's rows, and ONE groupBy on the key sums both —
+    * the partial aggregate runs map-side under a single exchange, so a
+    * micro-batch is two Spark jobs (shuffle map stage, write); a
+    * session running the opt-in [[graft.plans.PushAggThroughUnion]]
+    * rule splits that aggregate per union arm, one job more. `sum`
+    * skips nulls at one level exactly as it did at two: a user whose
+    * batch values are all null keeps the prior total, and a user with
+    * only null values has a null total. */
   def upsertBatch(sinkDir: String)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val root = java.nio.file.Paths.get(sinkDir)
-    java.nio.file.Files.createDirectories(root)
+    val root = Paths.get(sinkDir)
+    Files.createDirectories(root)
     val commit = root.resolve("_commit")
     val (lastId, lastVersion) =
-      if (java.nio.file.Files.exists(commit)) {
-        val Array(i, v) =
-          new String(java.nio.file.Files.readAllBytes(commit)).split(",")
+      if (Files.exists(commit)) {
+        val Array(i, v) = new String(Files.readAllBytes(commit)).split(",")
         (i.toLong, v.toLong)
       } else (-1L, -1L)
     if (batchId <= lastId) return // replayed epoch: already merged
-    val batchAgg = batch.groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value")).as("total_value"))
-    val merged =
-      if (lastVersion < 0) batchAgg
-      else spark.read.parquet(s"$sinkDir/v$lastVersion")
-        .unionByName(batchAgg)
-        .groupBy("user_id")
-        .agg(sum(col("n_events")).as("n_events"),
-          sum(col("total_value")).as("total_value"))
+    val delta = batch.select(col("user_id"), lit(1L).as("n_events"),
+      col("value").as("total_value"))
+    val rows =
+      if (lastVersion < 0) delta
+      else delta.unionByName(
+        spark.read.schema(UpsertStateSchema).parquet(s"$sinkDir/v$lastVersion"))
     val next = lastVersion + 1
-    merged.write.mode("overwrite").parquet(s"$sinkDir/v$next")
+    rows.groupBy("user_id")
+      .agg(sum(col("n_events")).as("n_events"),
+        sum(col("total_value")).as("total_value"))
+      .write.mode("overwrite").parquet(s"$sinkDir/v$next")
     // the pointer itself must flip atomically: an in-place overwrite
     // could crash between truncate and write, leaving a corrupt pointer
     // that wedges every later batch — write-temp-then-rename instead
     val tmp = root.resolve("_commit.tmp")
-    java.nio.file.Files.write(tmp, s"$batchId,$next".getBytes)
-    java.nio.file.Files.move(tmp, commit,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // superseded versions are dead once the pointer moved: GC them, or
-    // a long stream accumulates a full state copy per micro-batch
-    (0L until next).foreach { v =>
-      val dir = root.resolve(s"v$v")
-      if (java.nio.file.Files.exists(dir)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.delete)
+    Files.write(tmp, s"$batchId,$next".getBytes)
+    Files.move(tmp, commit, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+    // every other version is dead once the pointer moved — the one it
+    // replaced, and any in-flight one a crash orphaned. One listing of
+    // the root: the work tracks the live directories, not the number of
+    // batches ever committed
+    val live = s"v$next"
+    Using.resource(Files.list(root))(_.iterator().asScala.toList)
+      .filter { p =>
+        val name = p.getFileName.toString
+        name != live && name.matches("v\\d+")
       }
-    }
+      .foreach { dir =>
+        Using.resource(Files.walk(dir))(_.iterator().asScala.toList)
+          .sortBy(-_.getNameCount)
+          .foreach(Files.delete)
+      }
   }
 
   /** Read the current committed state of an [[upsertBatch]] sink. */
   def upsertState(spark: SparkSession, sinkDir: String): DataFrame = {
-    val commit = java.nio.file.Paths.get(sinkDir, "_commit")
-    val v = new String(java.nio.file.Files.readAllBytes(commit))
-      .split(",")(1).toLong
-    spark.read.parquet(s"$sinkDir/v$v")
+    val commit = Paths.get(sinkDir, "_commit")
+    val v = new String(Files.readAllBytes(commit)).split(",")(1).toLong
+    spark.read.schema(UpsertStateSchema).parquet(s"$sinkDir/v$v")
   }
 
   // ---- batch-mode oracle-checkable queries ----

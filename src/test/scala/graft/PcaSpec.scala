@@ -83,4 +83,29 @@ class PcaSpec extends SparkTestBase {
       0.015 * tc.rayleigh.last,
       s"variance removed ${before - after} vs lambda ${tc.rayleigh.last}")
   }
+
+  /** A copy of the sf corpus under a fresh directory (a fresh DfCache
+    * key), with `extra` rows appended. */
+  private def corpusCopy(extra: org.apache.spark.sql.DataFrame*): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pca").toString
+    extra.foldLeft(graft.sources.Tables.embeddings(spark, sf))(_ unionByName _)
+      .write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  test("a null embedding fails loudly instead of undercounting n, " +
+      "at the same job count") {
+    val (tc, jobs) = org.apache.spark.GraftJobCounter.jobsRunBy(
+      spark.sparkContext)(P.topComponent(spark, corpusCopy()))
+    assert(tc.n == x.length.toLong)
+    // 64 is the count measured with plain posexplode: the outer explode
+    // rides in the same profile aggregation and must not add a job
+    assert(jobs == 64, s"topComponent ran $jobs jobs")
+    val nullRow = spark.range(1).select(lit(-1L).as("vec_id"),
+      lit(null).cast("array<float>").as("embedding"), lit(0).as("label"))
+    val e = intercept[IllegalArgumentException](
+      P.topComponent(spark, corpusCopy(nullRow)))
+    assert(e.getMessage.contains("null or empty embedding"), e.getMessage)
+  }
 }
+

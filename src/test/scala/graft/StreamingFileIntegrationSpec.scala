@@ -251,4 +251,55 @@ class StreamingFileIntegrationSpec extends SparkTestBase {
         s"user $uid count must be base + exactly one delta application")
     }
   }
+
+  test("upsert sink: a non-first batch runs 2 jobs, one version " +
+      "directory survives, and null values merge like a two-level sum") {
+    val sink = Files.createTempDirectory("graft_stream_shape").toString
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "user_id BIGINT, value DOUBLE")
+    def batchOf(rows: (Long, java.lang.Double)*): DataFrame =
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows.map { case (u, v) =>
+          org.apache.spark.sql.Row(u, v) }: _*), schema)
+    val batches = Seq(
+      Seq[(Long, java.lang.Double)](1L -> 1.5, 2L -> 2.0, 3L -> null),
+      Seq[(Long, java.lang.Double)](1L -> 0.25, 2L -> 4.0, 2L -> 1.0),
+      // user 1: every value null, so the prior total stays; user 4: a
+      // new user with only null values, so the total is null
+      Seq[(Long, java.lang.Double)](1L -> null, 1L -> null, 4L -> null,
+        2L -> 3.0))
+    Streams.upsertBatch(sink)(batchOf(batches(0): _*), 0L)
+    // a crash between a version write and the pointer move orphans a
+    // version directory; the next commit deletes it
+    Files.createDirectories(Paths.get(sink, "v7"))
+    // suites share one session, and q09 adds PushAggThroughUnion to it,
+    // which splits the sink's union aggregate into one exchange per arm
+    // (3 jobs): count the sink's own plan without that opt-in rule
+    val rules = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = Nil
+    try batches.zipWithIndex.drop(1).foreach { case (b, i) =>
+      val (_, jobs) = org.apache.spark.GraftJobCounter.jobsRunBy(
+        spark.sparkContext)(Streams.upsertBatch(sink)(batchOf(b: _*), i))
+      assert(jobs == 2, s"batch $i ran $jobs Spark jobs")
+    } finally spark.experimental.extraOptimizations = rules
+    val versions = new java.io.File(sink).list().filter(_.matches("v\\d+"))
+    assert(versions.toSeq == Seq("v2"),
+      s"expected only the committed version, found ${versions.mkString(",")}")
+    // reference two-level merge: per batch count and sum (null when
+    // every value is null), then per user the sum of both over batches
+    def sumOpt(xs: Seq[Option[Double]]): Option[Double] =
+      xs.flatten.reduceOption(_ + _)
+    val expected = batches.map(_.groupBy(_._1).map { case (u, rs) =>
+        u -> (rs.size.toLong, sumOpt(rs.map(r => Option(r._2).map(_.doubleValue))))
+      })
+      .flatten.groupBy(_._1).map { case (u, parts) =>
+        (u, parts.map(_._2._1).sum, sumOpt(parts.map(_._2._2)))
+      }.toSet
+    val state = Streams.upsertState(spark, sink).collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
+    assert(state == expected)
+    assert(state.contains((1L, 4L, Some(1.75))) &&
+      state.contains((4L, 1L, None)) && state.contains((3L, 1L, None)))
+  }
 }
